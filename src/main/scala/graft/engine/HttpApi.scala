@@ -1,6 +1,8 @@
 package graft.engine
 
 import java.net.InetSocketAddress
+import java.util.concurrent.Executors
+import java.util.concurrent.atomic.AtomicInteger
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 /** HTTP serving layer — the reference's URL surface (`core/urls.py`,
@@ -9,7 +11,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * dependencies, one small thread pool, route-for-route parity:
   *
   *   - `POST /api/query/`    → [[QueryService.process]] (400 on empty
-  *     query or invalid JSON, 500 on unexpected errors — `views.py:14-63`)
+  *     query or invalid JSON, 500 on unexpected errors — `views.py:14-63`;
+  *     413 on a body over [[maxBodyBytes]])
   *   - `GET  /api/examples/` → the 15 examples (`views.py:65-89`)
   *   - `GET  /api/health/`   → health envelope (`views.py:91-99`)
   *   - `GET  /api/info/`     → API info + endpoint map (`views.py:101-121`)
@@ -28,7 +31,10 @@ object HttpApi {
   private[graft] def extractQuery(body: String): Option[String] = {
     val trimmed = Option(body).getOrElse("").trim
     if (!trimmed.startsWith("{")) return None
-    val m = """"query"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
+    // possessive runs keep the regex engine from recursing once per
+    // character, which overflows the stack on a question of a few thousand
+    // characters, well inside the body bound
+    val m = """"query"\s*:\s*"([^"\\]*+(?:\\.[^"\\]*+)*+)"""".r
     m.findFirstMatchIn(trimmed) match {
       case None => Some("")
       case Some(g) =>
@@ -53,6 +59,9 @@ object HttpApi {
     }
   }
 
+  /** Largest `/api/query/` body read; a longer one is refused with 413. */
+  private[graft] val maxBodyBytes: Int = 64 * 1024
+
   private def jsonOf(fields: Seq[(String, Any)]): String =
     fields.map { case (k, v) =>
       s"${Serializer.jsonEscape(k)}:${Serializer.toJsonValue(v)}"
@@ -75,8 +84,12 @@ object HttpApi {
     server.createContext("/api/query/", (ex: HttpExchange) =>
       if (ex.getRequestMethod != "POST") methodNotAllowed(ex)
       else try {
-        val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
-        extractQuery(body) match {
+        val raw = ex.getRequestBody.readNBytes(maxBodyBytes + 1)
+        if (raw.length > maxBodyBytes)
+          respond(ex, 413, jsonOf(Seq(
+            "success" -> false,
+            "error" -> s"Request body exceeds $maxBodyBytes bytes")))
+        else extractQuery(new String(raw, "UTF-8")) match {
           case None => // views.py:51-56
             respond(ex, 400, jsonOf(Seq(
               "success" -> false, "error" -> "Invalid JSON in request body")))
@@ -116,7 +129,14 @@ object HttpApi {
           "GET /api/info/" -> "API information"),
         "supported_queries" -> ApiSurface.supportedQueries.map(s => s: Any)))))
 
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+    // daemon threads: server.stop does not end the pool, and a non-daemon
+    // pool would keep the JVM alive after main returns
+    val workers = new AtomicInteger()
+    server.setExecutor(Executors.newFixedThreadPool(4, (r: Runnable) => {
+      val t = new Thread(r, s"graft-http-${workers.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }))
     server.start()
     server
   }

@@ -1,6 +1,7 @@
 package graft.engine
 
 import java.security.MessageDigest
+import java.util.HexFormat
 import scala.collection.concurrent.TrieMap
 
 /** md5-keyed result cache — port of the reference's LocMemCache usage
@@ -23,7 +24,7 @@ class QueryCache[V](
 
   def md5Key(query: String): String = {
     val d = MessageDigest.getInstance("MD5").digest(query.getBytes("UTF-8"))
-    "ai_query_" + d.map("%02x".format(_)).mkString
+    "ai_query_" + HexFormat.of().formatHex(d)
   }
 
   def get(query: String): Option[V] = {

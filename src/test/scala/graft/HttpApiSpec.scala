@@ -2,6 +2,9 @@ package graft
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import graft.engine.{HttpApi, QueryService, Tables}
 
@@ -9,22 +12,25 @@ import graft.engine.{HttpApi, QueryService, Tables}
   * for real over the JDK HttpServer and driven with a real HTTP client:
   * route parity, status-code parity (200 envelopes for processed queries,
   * 400 for empty/invalid, 405 for wrong methods), and end-to-end NL→SQL→
-  * Spark execution through POST /api/query/.
+  * Spark execution through POST /api/query/. Also a bounded request body
+  * and a worker pool that does not keep the JVM alive.
   */
 class HttpApiSpec extends SparkSuite {
 
   private lazy val client = HttpClient.newHttpClient()
+  // a handler that dies without answering fails the test instead of hanging it
+  private val timeout = java.time.Duration.ofSeconds(60)
 
   private def post(base: String, path: String, body: String): HttpResponse[String] =
     client.send(
-      HttpRequest.newBuilder(URI.create(base + path))
+      HttpRequest.newBuilder(URI.create(base + path)).timeout(timeout)
         .header("Content-Type", "application/json")
         .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
       HttpResponse.BodyHandlers.ofString())
 
   private def get(base: String, path: String): HttpResponse[String] =
     client.send(
-      HttpRequest.newBuilder(URI.create(base + path)).GET().build(),
+      HttpRequest.newBuilder(URI.create(base + path)).timeout(timeout).GET().build(),
       HttpResponse.BodyHandlers.ofString())
 
   test("the four reference routes serve end-to-end over real HTTP") {
@@ -66,6 +72,44 @@ class HttpApiSpec extends SparkSuite {
     } finally server.stop(0)
   }
 
+  test("a body over maxBodyBytes is refused with 413 and the error envelope") {
+    val server = HttpApi.start(new QueryService(spark), port = 0)
+    val base = s"http://localhost:${server.getAddress.getPort}"
+    try {
+      val over = post(base, "/api/query/",
+        s"""{"query": "${"x" * HttpApi.maxBodyBytes}"}""")
+      assert(over.statusCode === 413)
+      assert(over.body.startsWith("{\"success\":false,\"error\":"))
+
+      // a question that fills the whole bound is read and answered
+      Tables.registerEmployees(spark, sfDir)
+      val head = """{"query": "How many employees work in the IT department? """
+      val atLimit = post(base, "/api/query/",
+        head + "x" * (HttpApi.maxBodyBytes - head.length - 2) + "\"}")
+      assert(atLimit.statusCode === 200 && atLimit.body.contains("\"success\":true"))
+    } finally server.stop(0)
+  }
+
+  test("stopping the server leaves no non-daemon pool thread behind") {
+    val server = HttpApi.start(new QueryService(spark), port = 0)
+    val workers = new ConcurrentLinkedQueue[Thread]()
+    val arrived = new CountDownLatch(4)
+    try {
+      assert(get(s"http://localhost:${server.getAddress.getPort}", "/api/health/")
+        .statusCode === 200)
+      // four tasks that wait for each other occupy all four pool threads
+      (1 to 4).foreach(_ => server.getExecutor.execute { () =>
+        workers.add(Thread.currentThread())
+        arrived.countDown()
+        arrived.await(10, TimeUnit.SECONDS)
+      })
+      assert(arrived.await(10, TimeUnit.SECONDS))
+    } finally server.stop(0)
+    assert(workers.size === 4)
+    val left = workers.asScala.filter(t => t.isAlive && !t.isDaemon)
+    assert(left.isEmpty, s"non-daemon pool threads: ${left.map(_.getName).mkString(", ")}")
+  }
+
   test("extractQuery distinguishes invalid JSON from empty queries") {
     assert(HttpApi.extractQuery("plain text").isEmpty)
     assert(HttpApi.extractQuery("""{"other": 1}""") === Some(""))
@@ -76,5 +120,10 @@ class HttpApiSpec extends SparkSuite {
     assert(HttpApi.extractQuery("""{"query": "ok \u0041"}""") === Some("ok A"))
     // a truncated \uXX escape must not throw
     assert(HttpApi.extractQuery("{\"query\": \"bad \\u12\"}").isDefined)
+    // long strings, with or without escapes, do not overflow the stack
+    assert(HttpApi.extractQuery(s"""{"query": "${"x" * 60000}"}""").map(_.length) ===
+      Some(60000))
+    assert(HttpApi.extractQuery(s"""{"query": "${"a\\\"" * 20000}"}""").map(_.length) ===
+      Some(40000))
   }
 }

@@ -1,6 +1,11 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.engine.{TableInspector, Tables}
 
 /** Fixture goldens (SURVEY.md §5 item 4) + bridge-view determinism +
@@ -38,6 +43,65 @@ class TablesSpec extends SparkSuite {
     val a = Tables.employees(spark, sfDir).orderBy("id").collect()
     val b = Tables.employees(spark, sfDir).orderBy("id").collect()
     assert(a.toSeq === b.toSeq)
+  }
+
+  test("registerEmployees serves employees from Spark's in-memory cache") {
+    // the expected rows come from parquet, before anything is cached
+    if (spark.catalog.tableExists("employees")) spark.catalog.uncacheTable("employees")
+    val expected = Tables.employees(spark, sfDir).orderBy("id").collect().toSeq
+    Tables.registerEmployees(spark, sfDir)
+    assert(spark.catalog.isCached("employees"))
+    assert(spark.sql("SELECT COUNT(*) FROM employees")
+      .queryExecution.optimizedPlan.toString.contains("InMemoryRelation"))
+    val served = spark.table("employees").orderBy("id").collect().toSeq
+    assert(served.length === 150)
+    assert(served === expected)
+  }
+
+  test("registerEmployees again for the same dir fires no Spark job") {
+    Tables.registerEmployees(spark, sfDir)
+    val sc = spark.sparkContext
+    val group = "register-employees-again"
+    val jobs = new AtomicInteger()
+    val marker = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some("marker") => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "second registration")
+      Tables.registerEmployees(spark, sfDir)
+      // listener events arrive in order: once the marker job is seen, every
+      // job the registration started has been counted
+      sc.setJobGroup("marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(30, TimeUnit.SECONDS))
+      assert(jobs.get === 0)
+      assert(spark.catalog.isCached("employees"))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("registerEmployees for another dir serves that dir's rows, none stale") {
+    val larger = new java.io.File(sfDir).getParent + "/sf0.01" // 1,500 customers
+    try {
+      Tables.registerEmployees(spark, sfDir)
+      assert(Tables.employees(spark, sfDir).storageLevel !== StorageLevel.NONE)
+      val expected = Tables.employees(spark, larger).orderBy("id").collect().toSeq
+      Tables.registerEmployees(spark, larger)
+      assert(spark.catalog.isCached("employees"))
+      assert(spark.sql("SELECT COUNT(*) FROM employees").head().getLong(0) === 1500)
+      assert(spark.table("employees").orderBy("id").collect().toSeq === expected)
+      // the sf0.001 rows are no longer held in the cache
+      assert(Tables.employees(spark, sfDir).storageLevel === StorageLevel.NONE)
+    } finally Tables.registerEmployees(spark, sfDir)
   }
 
   test("events.ts is read as microsecond timestamps under UTC") {
