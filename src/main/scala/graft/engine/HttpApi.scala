@@ -11,8 +11,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * dependencies, one small thread pool, route-for-route parity:
   *
   *   - `POST /api/query/`    → [[QueryService.process]] (400 on empty
-  *     query or invalid JSON, 500 on unexpected errors — `views.py:14-63`;
-  *     413 on a body over [[maxBodyBytes]])
+  *     query or invalid JSON, 500 on anything thrown while answering —
+  *     `views.py:14-63`; 413 on a body over [[maxBodyBytes]])
   *   - `GET  /api/examples/` → the 15 examples (`views.py:65-89`)
   *   - `GET  /api/health/`   → health envelope (`views.py:91-99`)
   *   - `GET  /api/info/`     → API info + endpoint map (`views.py:101-121`)
@@ -78,46 +78,45 @@ object HttpApi {
       val os = ex.getResponseBody
       try os.write(bytes) finally os.close()
     }
-    def methodNotAllowed(ex: HttpExchange): Unit =
-      respond(ex, 405, jsonOf(Seq("success" -> false, "error" -> "method not allowed")))
+    def error(ex: HttpExchange, code: Int, message: String): Unit =
+      respond(ex, code, jsonOf(Seq("success" -> false, "error" -> message)))
 
-    server.createContext("/api/query/", (ex: HttpExchange) =>
-      if (ex.getRequestMethod != "POST") methodNotAllowed(ex)
-      else try {
-        val raw = ex.getRequestBody.readNBytes(maxBodyBytes + 1)
-        if (raw.length > maxBodyBytes)
-          respond(ex, 413, jsonOf(Seq(
-            "success" -> false,
-            "error" -> s"Request body exceeds $maxBodyBytes bytes")))
-        else extractQuery(new String(raw, "UTF-8")) match {
-          case None => // views.py:51-56
-            respond(ex, 400, jsonOf(Seq(
-              "success" -> false, "error" -> "Invalid JSON in request body")))
-          case Some(q) if q.trim.isEmpty => // views.py:20-24
-            respond(ex, 400, jsonOf(Seq(
-              "success" -> false, "error" -> "Query cannot be empty")))
-          case Some(q) => // success AND compile-failure envelopes are 200,
-            // exactly like JsonResponse(result) in views.py:49
-            respond(ex, 200, service.process(q).toJson)
-        }
-      } catch {
-        case e: Exception => // views.py:57-63
-          respond(ex, 500, jsonOf(Seq(
-            "success" -> false, "error" -> s"Unexpected error: ${e.getMessage}")))
-      })
+    /** Serve `path` for one method. Whatever the handler throws, `Error`s
+      * included, is answered with 500 (views.py:57-63): an exchange left
+      * unanswered keeps its client waiting until the client's own timeout.
+      */
+    def route(path: String, method: String)(handle: HttpExchange => Unit): Unit =
+      server.createContext(path, (ex: HttpExchange) =>
+        if (ex.getRequestMethod != method) error(ex, 405, "method not allowed")
+        else try handle(ex) catch {
+          case e: Throwable =>
+            error(ex, 500, s"Unexpected error: ${Option(e.getMessage).getOrElse(e.toString)}")
+        })
 
-    server.createContext("/api/examples/", (ex: HttpExchange) =>
-      if (ex.getRequestMethod != "GET") methodNotAllowed(ex)
-      else respond(ex, 200, jsonOf(Seq(
-        "success" -> true, "examples" -> ApiSurface.examples.map(e => e: Any)))))
+    route("/api/query/", "POST") { ex =>
+      val raw = ex.getRequestBody.readNBytes(maxBodyBytes + 1)
+      if (raw.length > maxBodyBytes)
+        error(ex, 413, s"Request body exceeds $maxBodyBytes bytes")
+      else extractQuery(new String(raw, "UTF-8")) match {
+        case None => // views.py:51-56
+          error(ex, 400, "Invalid JSON in request body")
+        case Some(q) if q.trim.isEmpty => // views.py:20-24
+          error(ex, 400, "Query cannot be empty")
+        case Some(q) => // success AND compile-failure envelopes are 200,
+          // exactly like JsonResponse(result) in views.py:49
+          respond(ex, 200, service.process(q).toJson)
+      }
+    }
 
-    server.createContext("/api/health/", (ex: HttpExchange) =>
-      if (ex.getRequestMethod != "GET") methodNotAllowed(ex)
-      else respond(ex, 200, jsonOf(ApiSurface.health.toSeq)))
+    route("/api/examples/", "GET") { ex =>
+      respond(ex, 200, jsonOf(Seq(
+        "success" -> true, "examples" -> ApiSurface.examples.map(e => e: Any))))
+    }
 
-    server.createContext("/api/info/", (ex: HttpExchange) =>
-      if (ex.getRequestMethod != "GET") methodNotAllowed(ex)
-      else respond(ex, 200, jsonOf(Seq(
+    route("/api/health/", "GET")(respond(_, 200, jsonOf(ApiSurface.health.toSeq)))
+
+    route("/api/info/", "GET") { ex =>
+      respond(ex, 200, jsonOf(Seq(
         "name" -> "DataFabric Employee Query API",
         "version" -> "1.0.0",
         "description" ->
@@ -127,7 +126,8 @@ object HttpApi {
           "GET /api/examples/" -> "Get example queries",
           "GET /api/health/" -> "Health check",
           "GET /api/info/" -> "API information"),
-        "supported_queries" -> ApiSurface.supportedQueries.map(s => s: Any)))))
+        "supported_queries" -> ApiSurface.supportedQueries.map(s => s: Any))))
+    }
 
     // daemon threads: server.stop does not end the pool, and a non-daemon
     // pool would keep the JVM alive after main returns

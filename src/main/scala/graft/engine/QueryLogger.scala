@@ -19,11 +19,11 @@ case class QueryLog(
     timestamp: Timestamp)
 
 /** Append-only query log. In-memory buffer + on-demand DataFrame view
-  * (newest-first, matching `QueryLog.Meta.ordering`, `models.py:71`);
-  * optional parquet append sink for durability. At cluster scale this is a
-  * driver-side telemetry append — tiny rows, no distributed concerns.
+  * (newest-first, matching `QueryLog.Meta.ordering`, `models.py:71`). At
+  * cluster scale this is a driver-side telemetry append — tiny rows, no
+  * distributed concerns.
   */
-class QueryLogger(sinkPath: Option[String] = None) {
+class QueryLogger {
 
   private val buffer = ListBuffer.empty[QueryLog]
 
@@ -47,9 +47,6 @@ class QueryLogger(sinkPath: Option[String] = None) {
     import spark.implicits._
     spark.createDataset(entries).toDF()
   }
-
-  def flush(spark: SparkSession): Unit =
-    sinkPath.foreach(p => toDf(spark).write.mode("append").parquet(p))
 
   def clear(): Unit = synchronized { buffer.clear() }
 }

@@ -1,5 +1,6 @@
 package graft.engine
 
+import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{DataFrame, Row}
 
 /** Result serializer — port of the reference's row normalization
@@ -31,12 +32,16 @@ object Serializer {
     case other => other.toString
   }
 
+  /** Collect and normalize `df`. Each row map keeps `columns` order (the
+    * reference's `dict(zip(columns, row))`), so its JSON object lists the
+    * fields in the order the SQL selected them.
+    */
   def toData(df: DataFrame): (Seq[Map[String, Any]], Seq[String]) = {
     val columns = df.columns.toSeq
     val data = df.collect().toSeq.map { row: Row =>
-      columns.zipWithIndex.map { case (c, i) =>
+      ListMap.from(columns.zipWithIndex.map { case (c, i) =>
         c -> normalize(c, row.get(i))
-      }.toMap
+      })
     }
     (data, columns)
   }

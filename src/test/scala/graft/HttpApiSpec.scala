@@ -6,7 +6,7 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
-import graft.engine.{HttpApi, QueryService, Tables}
+import graft.engine.{HttpApi, NlToSql, QueryService, Tables}
 
 /** The reference's HTTP surface (`core/urls.py` + `core/views.py`), served
   * for real over the JDK HttpServer and driven with a real HTTP client:
@@ -87,6 +87,23 @@ class HttpApiSpec extends SparkSuite {
       val atLimit = post(base, "/api/query/",
         head + "x" * (HttpApi.maxBodyBytes - head.length - 2) + "\"}")
       assert(atLimit.statusCode === 200 && atLimit.body.contains("\"success\":true"))
+    } finally server.stop(0)
+  }
+
+  test("an Error thrown while answering gets a 500 envelope, not a hung client") {
+    val failing = new NlToSql {
+      override def compile(userQuery: String): Option[String] =
+        throw new StackOverflowError("compiler blew its stack")
+    }
+    val server = HttpApi.start(new QueryService(spark, Seq(failing)), port = 0)
+    val base = s"http://localhost:${server.getAddress.getPort}"
+    try {
+      val r = post(base, "/api/query/", """{"query": "How many employees are there?"}""")
+      assert(r.statusCode === 500)
+      assert(r.body ===
+        "{\"success\":false,\"error\":\"Unexpected error: compiler blew its stack\"}")
+      // the server keeps answering
+      assert(get(base, "/api/health/").statusCode === 200)
     } finally server.stop(0)
   }
 
